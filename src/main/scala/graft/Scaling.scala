@@ -22,7 +22,8 @@ import java.nio.file.{Files, Paths}
   * Measured job (the north-star flagship): read docs → posexplode spans →
   * parse WKT points → point-in-polygon join against region boxes on the
   * zoom-5 cell grid → zoom-12 tile assignment → committed via CatalogIO
-  * (parquet + per-partition lineage rows). THREE join configs are timed:
+  * (parquet + per-file lineage rows (footer row count and bytes)).
+  * THREE join configs are timed:
   * ADAPTIVE hot-cell salting (the engine's recommended path, = q52),
   * blanket salt=8, and unsalted — the blanket-vs-adaptive gap is itself
   * evidence (blanket replication costs scale once the refine is cheap).
@@ -208,7 +209,8 @@ object Scaling {
          |path, = q52), blanket salt=8, and unsalted.
          |Timed action = full compute + shuffle reduced to a
          |row-count + hash signature over all output columns (nothing pruned);
-         |the parquet commit (CatalogIO, with per-partition lineage rows) runs
+         |the parquet commit (CatalogIO, with per-file lineage rows (footer
+         |row count and bytes)) runs
          |outside the timing because this sandbox has one shared local disk,
          |which serializes a write that a real cluster spreads per executor.
          |The 4N run commits the output once as lineage-table evidence.

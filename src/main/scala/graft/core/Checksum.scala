@@ -27,16 +27,4 @@ object Checksum {
     }
     (sum % Mod).toInt
   }
-
-  /** Integer-pixel variant shared with SQL oracles (exact in Long). */
-  def checksumInts(pixels: Array[Long]): Int = {
-    var sum = 0L
-    var i = 0
-    while (i < pixels.length) {
-      sum += pixels(i) * (i % 49 + 1)
-      sum &= 0xffffffffL
-      i += 1
-    }
-    (sum % Mod).toInt
-  }
 }

@@ -69,15 +69,7 @@ object Codec {
     (w, h, out)
   }
 
-  def encodePngGray(px: Array[Int], w: Int, h: Int): Array[Byte] = encodeGray(px, w, h, "png")
   def decodePngGray(bytes: Array[Byte]): (Int, Int, Array[Int]) = decodeGray(bytes)
-
-  /** TIFF via the JDK 9+ bundled ImageIO TIFF plugin (reference:
-    * frmts/gtiff/geotiff.cpp — the format users actually bring).
-    * Uncompressed baseline gray TIFF; lossless like the PNG path, so the
-    * same closed-form-pixel checksum oracle stays bit-exact. */
-  def encodeTiffGray(px: Array[Int], w: Int, h: Int): Array[Byte] = encodeGray(px, w, h, "tiff")
-  def decodeTiffGray(bytes: Array[Byte]): (Int, Int, Array[Int]) = decodeGray(bytes)
 
   /** JPEG via the JDK's built-in ImageIO plugin (reference:
     * frmts/jpeg/jpgdataset.cpp — the most-used lossy driver). LOSSY, so
@@ -107,7 +99,4 @@ object Codec {
     } finally { writer.dispose(); ios.close() }
     bos.toByteArray
   }
-
-  /** Magic-byte-sniffing decode works for JPEG too (ImageIO.read). */
-  def decodeJpegGray(bytes: Array[Byte]): (Int, Int, Array[Int]) = decodeGray(bytes)
 }

@@ -76,21 +76,6 @@ object Scanline {
     out.result()
   }
 
-  /** Burn all polygons of a (multi)geometry; returns (py, xs, xe) runs. */
-  def fillGeometry(g: Geometry, gx0: Double, gy0: Double, pw: Double, ph: Double,
-                   w: Int, h: Int): Array[(Int, Int, Int)] = {
-    val out = Array.newBuilder[(Int, Int, Int)]
-    var i = 0
-    while (i < g.getNumGeometries) {
-      g.getGeometryN(i) match {
-        case p: Polygon => out ++= fillPolygon(p, gx0, gy0, pw, ph, w, h)
-        case _          => // lines/points handled by rasterizeLine below
-      }
-      i += 1
-    }
-    out.result()
-  }
-
   /** ALL_TOUCHED-style line burn: every pixel the half-pixel-step DDA walk
     * samples (reference: alg/llrasterize.cpp ::
     * GDALdllImageLineAllTouched), returned as (px, py) pairs, deduped.

@@ -148,10 +148,4 @@ object TileMath {
     val ty1 = geoTileY(minLat, zoom) max ty0
     (tx1 - tx0 + 1) * (ty1 - ty0 + 1)
   }
-
-  /** Size of one geodetic cell in degrees at a zoom: (width, height). */
-  def geoCellSizeDeg(zoom: Int): (Double, Double) = {
-    val res = 180.0 / (1L << zoom).toDouble
-    (res, res)
-  }
 }

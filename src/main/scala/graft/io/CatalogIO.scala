@@ -2,8 +2,13 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
+import scala.util.Using
 
 /** Iceberg-shaped table IO without the Iceberg runtime (not on the
   * classpath — SURVEY.md §0): Parquet data + an atomically-renamed JSON
@@ -14,8 +19,8 @@ import java.nio.charset.StandardCharsets
   * Spark re-expression of the reference's memory-bounded restartable
   * chunking (reference: alg/gdalwarpoperation.cpp :: CollectChunkList) and
   * progress reporting (port/cpl_progress.cpp :: GDALTermProgress):
-  * a stage whose manifest exists is never recomputed; per-partition
-  * lineage + metrics rows are appended alongside every commit.
+  * a stage whose manifest exists is never recomputed; per-file lineage
+  * rows (footer row count and bytes) are appended alongside every commit.
   */
 object CatalogIO {
 
@@ -31,27 +36,22 @@ object CatalogIO {
     }
     Files.createDirectories(dir.getParent)
     val tmp = Paths.get(root, jobId, s".$stage.tmp-${System.nanoTime()}")
-    // per-partition metrics (lineage rows): partition id, rows, wall ms
-    val sc = spark.sparkContext
-    val rowsAcc = sc.longAccumulator(s"$stage-rows")
-    val counted = df.withColumn("__one", lit(1))
-    val metrics = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val out = counted.drop("__one")
-    out.write.mode("overwrite").parquet(tmp.resolve("data").toString)
-    // gather per-file (≈ per-partition) metrics from the committed files
     val dataDir = tmp.resolve("data")
-    val partFiles = Files.list(dataDir).iterator()
-    var nFiles = 0
-    while (partFiles.hasNext) { val f = partFiles.next(); if (f.toString.endsWith(".parquet")) nFiles += 1 }
-    val rows = spark.read.parquet(dataDir.toString).count()
-    val lineage = spark.read.parquet(dataDir.toString)
-      .withColumn("__pid", spark_partition_id())
-      .groupBy("__pid").agg(count(lit(1)).as("rows"))
-      .withColumn("job_id", lit(jobId)).withColumn("stage", lit(stage))
-      .withColumn("committed_at", current_timestamp())
-    lineage.write.mode("overwrite").parquet(tmp.resolve("lineage").toString)
+    df.write.mode("overwrite").parquet(dataDir.toString)
+    // row count and per-file lineage come from the written files' footers
+    // (Iceberg's data-file record_count / file_size_in_bytes): the write is
+    // the commit's only Spark job, nothing re-scans the output
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = Using.resource(Files.newDirectoryStream(dataDir, "part-*.parquet"))(_.asScala.toSeq)
+      .sortBy(_.getFileName.toString).map { p =>
+        val in = HadoopInputFile.fromPath(new HPath(p.toUri), conf)
+        (p.getFileName.toString, Using.resource(ParquetFileReader.open(in))(_.getRecordCount), in.getLength)
+      }
+    val rows = files.map(_._2).sum
+    writeLineage(tmp.resolve("lineage"), jobId, stage, files.map { case (f, n, bytes) =>
+      s""""file":${jsonStr(f)},"rows":$n,"bytes":$bytes""" })
     val manifestTxt =
-      s"""{"job_id":"$jobId","stage":"$stage","rows":$rows,"files":$nFiles,"schema":${jsonStr(df.schema.json)}}"""
+      s"""{"job_id":${jsonStr(jobId)},"stage":${jsonStr(stage)},"rows":$rows,"files":${files.length},"schema":${jsonStr(df.schema.json)}}"""
     Files.writeString(tmp.resolve("MANIFEST.json"), manifestTxt, StandardCharsets.UTF_8)
     // atomic publish
     if (Files.exists(dir)) deleteRec(dir)
@@ -127,13 +127,8 @@ object CatalogIO {
         .option("partitionOverwriteMode", "dynamic")
         .mode("overwrite")
         .parquet(dir.resolve("data").toString)
-      // lineage row per newly committed partition value
-      val lineageDir = dir.resolve("lineage")
-      val lines = newVals.map(v =>
-        s"""{"job_id":${jsonStr(jobId)},"stage":${jsonStr(stage)},"part":${jsonStr(v)},"committed_at_ms":${System.currentTimeMillis()}}""")
-      Files.createDirectories(lineageDir)
-      Files.writeString(lineageDir.resolve(s"parts-${System.nanoTime()}.json"),
-        lines.mkString("\n"), StandardCharsets.UTF_8)
+      writeLineage(dir.resolve("lineage"), jobId, stage,
+        newVals.toSeq.map(v => s""""part":${jsonStr(v)}"""))
       // manifest updated LAST (atomic rename) — crash before this line
       // leaves the new partitions uncommitted and safely rewritable
       val all = (committed ++ newVals).toSeq.sorted
@@ -174,8 +169,19 @@ object CatalogIO {
   def isCommitted(root: String, jobId: String, stage: String): Boolean =
     Files.exists(Paths.get(root, jobId, stage, "MANIFEST.json"))
 
+  /** Lineage rows of either commit kind: `job_id, stage, committed_at` (epoch
+    * ms) plus `file, rows, bytes` (commitStage) or `part` (commitPartitioned). */
   def lineage(spark: SparkSession, root: String, jobId: String, stage: String): DataFrame =
-    spark.read.parquet(Paths.get(root, jobId, stage, "lineage").toString)
+    spark.read.json(Paths.get(root, jobId, stage, "lineage").toString)
+
+  /** One JSON-lines lineage file under `dir`: a line per committed unit,
+    * `fields` holding each unit's own JSON members. */
+  private def writeLineage(dir: Path, jobId: String, stage: String, fields: Seq[String]): Unit = {
+    val head = s"""{"job_id":${jsonStr(jobId)},"stage":${jsonStr(stage)},"committed_at":${System.currentTimeMillis()}"""
+    Files.createDirectories(dir)
+    Files.writeString(dir.resolve(s"lineage-${System.nanoTime()}.json"),
+      fields.map(f => s"$head,$f}").mkString("\n"), StandardCharsets.UTF_8)
+  }
 
   private def jsonStr(s: String): String =
     "\"" + s.flatMap {
@@ -221,7 +227,7 @@ object CatalogIO {
     out.result()
   }
 
-  private def deleteRec(p: java.nio.file.Path): Unit = {
+  private def deleteRec(p: Path): Unit = {
     if (Files.isDirectory(p)) {
       val it = Files.list(p).iterator()
       while (it.hasNext) deleteRec(it.next())

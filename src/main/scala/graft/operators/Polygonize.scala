@@ -190,7 +190,7 @@ object Polygonize {
     // result is unchanged.
     import spark.implicits._
     val collected = edges.select(col("a").cast("long"), col("b").cast("long"))
-      .as[(Long, Long)].limit((driverThreshold + 1).toInt).collect()
+      .as[(Long, Long)].limit(math.min(driverThreshold, Int.MaxValue - 1L).toInt + 1).collect()
     if (collected.length <= driverThreshold) {
       val parent = new java.util.HashMap[Long, Long]()
       def find(x0: Long): Long = {

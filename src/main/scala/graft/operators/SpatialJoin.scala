@@ -318,13 +318,4 @@ object SpatialJoin {
       .where(call_function(s"st_$predicate", col(leftGeom), col(rightGeom)))
       .drop("__cell", "__envl", "__envr")
   }
-
-  /** Spatial overlay (reference: OGRLayer::Intersection) — the join above
-    * plus the geometric intersection of each surviving pair. */
-  def intersectionOverlay(left: DataFrame, leftId: String, leftGeom: String,
-                          right: DataFrame, rightId: String, rightGeom: String,
-                          zoom: Int): DataFrame = {
-    geomJoin(left, leftId, leftGeom, right, rightId, rightGeom, zoom)
-      .withColumn("geom_intersection", F.st_intersection(col(leftGeom), col(rightGeom)))
-  }
 }

@@ -29,6 +29,71 @@ class IoStreamSpec extends AnyFunSuite {
     assert(lin.columns.contains("job_id") && lin.columns.contains("committed_at"))
   }
 
+  test("commitStage starts no Spark job beyond its parquet write") {
+    val root = java.nio.file.Files.createTempDirectory("graft-jobs").toString
+    val df = spark.range(0, 1000, 1, 4).withColumn("k", col("id") % 7)
+      .groupBy("k").agg(count(lit(1)).as("n"))
+    val sc = spark.sparkContext
+    val jobsByGroup = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val groupOfJob = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val markerDone = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val g = Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
+        groupOfJob.put(e.jobId, g)
+        jobsByGroup.merge(g, 1, (a: Integer, b: Integer) => a + b)
+      }
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        if (groupOfJob.get(e.jobId) == "marker") markerDone.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("commit", "commitStage")
+      assert(CatalogIO.commitStage(spark, df, root, "jj", "s") == 7)
+      sc.setJobGroup("plain", "plain write")
+      df.write.parquet(s"$root/plain")
+      // listener events arrive in order: once the marker job has ended,
+      // every job of the two groups above has been counted
+      sc.setJobGroup("marker", "marker")
+      spark.range(1).collect()
+      assert(markerDone.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    assert(jobsByGroup.get("plain") != null && jobsByGroup.get("commit") == jobsByGroup.get("plain"),
+      s"commitStage jobs ${jobsByGroup.get("commit")} != plain write jobs ${jobsByGroup.get("plain")}")
+  }
+
+  test("commitStage lineage: one row per data file, footer counts match the committed data") {
+    val root = java.nio.file.Files.createTempDirectory("graft-lin").toString
+    val n = CatalogIO.commitStage(spark, spark.range(0, 1000, 1, 5).toDF("id"), root, "jl", "s")
+    assert(n == 1000)
+    val lin = CatalogIO.lineage(spark, root, "jl", "s")
+    val linRows = lin.select("file", "rows").collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    val scanned = CatalogIO.readStage(spark, root, "jl", "s")
+      .groupBy(substring_index(input_file_name(), "/", -1).as("file")).count()
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    assert(linRows == scanned && scanned.size == 5)
+    assert(lin.agg(sum("rows")).collect()(0).getLong(0) == n)
+    assert(lin.where(col("bytes") <= 0).count() == 0)
+  }
+
+  test("commitStage manifest is valid JSON for names holding quotes and backslashes") {
+    val root = java.nio.file.Files.createTempDirectory("graft-esc").toString
+    val stage = "s\"q\\1"
+    assert(CatalogIO.commitStage(spark, spark.range(3).toDF("id"), root, "j\"b", stage) == 3)
+    val m = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+      java.nio.file.Files.readString(java.nio.file.Paths.get(root, "j\"b", stage, "MANIFEST.json")))
+    assert(m.get("job_id").asText == "j\"b" && m.get("stage").asText == stage)
+    assert(m.get("rows").asLong == 3L)
+  }
+
+  test("commitStage of an empty DataFrame commits zero rows") {
+    val root = java.nio.file.Files.createTempDirectory("graft-empty").toString
+    assert(CatalogIO.commitStage(spark, spark.range(0).toDF("id"), root, "je", "s") == 0)
+    val txt = java.nio.file.Files.readString(java.nio.file.Paths.get(root, "je", "s", "MANIFEST.json"))
+    assert(txt.contains("\"rows\":0,"), txt)
+    assert(CatalogIO.commitStage(spark, spark.range(5).toDF("id"), root, "je", "s") == 0)
+  }
+
   test("mergeStage: MERGE INTO law — update/insert/carry, row-level source-wins, idempotent") {
     val root = java.nio.file.Files.createTempDirectory("graft-merge").toString
     val base = Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "c", 30L))
@@ -87,6 +152,10 @@ class IoStreamSpec extends AnyFunSuite {
     assert(back.agg(sum("v")).collect()(0).getLong(0) == (0 until 100).map(_ * 2).sum)
     // third run: nothing new
     assert(CatalogIO.commitPartitioned(spark, full, root, "j", "s", "part") == 0)
+    // lineage reads the partitioned stage: one row per committed value
+    val lin = CatalogIO.lineage(spark, root, "j", "s")
+    assert(lin.select("part").collect().map(_.getString(0)).sorted.toSeq == (0 until 10).map(_.toString))
+    assert(lin.where(col("job_id") === "j" && col("stage") === "s" && col("committed_at") > 0).count() == 10)
   }
 
   test("resume filter scales: 10^4 committed partitions stay a join, not an IN-list") {

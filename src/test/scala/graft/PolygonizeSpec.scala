@@ -357,6 +357,10 @@ class PolygonizeSpec extends AnyFunSuite {
     val drv = Polygonize.resolveLabels(nodes, edges)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(dist == drv)
+    // a threshold past Int.MaxValue must still collect every edge
+    val unbounded = Polygonize.resolveLabels(nodes, edges, driverThreshold = Long.MaxValue)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(unbounded == drv)
     assert(dist.filter(_._1 <= 32L).forall(_._2 == 1L))
     val ckDir = spark.sparkContext.getCheckpointDir
     assert(ckDir.isDefined, "reliable checkpoint dir must be set by Checkpoints.reliable")
