@@ -43,6 +43,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         if (sys.env.contains("GRAFT_VERIFY_DEBUG")) e.printStackTrace()
       }
+      // as Bench does: operator persists never outlive their query
+      spark.sharedState.cacheManager.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -4,10 +4,10 @@ import org.apache.spark.sql.DataFrame
 
 /** Reliable (cluster-safe) eager checkpoints for iterative operators.
   *
-  * The kNN ring-doubling loop and polygonize's pointer-jumping label loop
-  * must truncate lineage every round (a persist would stack O(rounds) of
-  * plan on plan). Round-4's `localCheckpoint(true)` did that but is
-  * cluster-UNSAFE: a local checkpoint's blocks live only on the executors
+  * Polygonize's pointer-jumping label loop must truncate lineage every
+  * round (a persist would stack O(rounds) of plan on plan). Round-4's
+  * `localCheckpoint(true)` did that but is cluster-UNSAFE: a local
+  * checkpoint's blocks live only on the executors
   * that computed them, so one lost executor poisons the lineage of every
   * later round (the same analysis Dedup.ngramJaccard documents). This
   * helper routes the truncation through a RELIABLE checkpoint instead —
@@ -57,21 +57,25 @@ object Checkpoints {
     * `interval`-th round still goes through a true reliable checkpoint.
     * Cluster safety: the persisted RDDs keep their lineage, so a lost
     * block recomputes through at most `interval` rounds back to the last
-    * reliable cut (never the fatal localCheckpoint block loss). The
-    * previous round's RDD is unpersisted after the new round
-    * materializes. */
+    * reliable cut (never the fatal localCheckpoint block loss). A round's
+    * RDD is unpersisted only once its child has materialized — a round
+    * released while it is still the parent of an unmaterialized one makes
+    * the next probe recompute back to the last reliable cut. Three
+    * generations suffice for loops that probe at least every second cut
+    * (Dedup.clusters, Network.shortestPaths, Polygonize). */
   final class RoundCache(interval: Int = 8) {
-    private var r1: org.apache.spark.rdd.RDD[_] = null // most recent cut
-    private var r2: org.apache.spark.rdd.RDD[_] = null // the cut before it
+    // the last three cuts, oldest first
+    private val gens = scala.collection.mutable.Queue.empty[org.apache.spark.rdd.RDD[_]]
     private var idx = 0
     /** LAZY cut: no eager job here — the caller's next action (a
       * convergence signature, the following round's cut chain, or the
       * loop's final result action) materializes the persisted RDD. A
       * loop with no per-round driver decision (PageRank's fixed `iters`)
       * therefore runs as ONE multi-stage job instead of 2·iters jobs.
-      * Release is deferred one cut (the previous round is this round's
-      * parent); unpersisting a never-computed RDD is a no-op, and
-      * lineage stays intact either way. */
+      * Release is deferred two cuts, so a round stays cached until a
+      * probe at least every second cut has materialized its child;
+      * unpersisting a never-computed RDD is a no-op, and lineage stays
+      * intact either way. */
     def cut(df: DataFrame): DataFrame = {
       val out =
         if (interval > 0 && idx % interval == interval - 1) {
@@ -81,9 +85,8 @@ object Checkpoints {
         } else {
           val rdd = df.queryExecution.toRdd.map(_.copy())
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          if (r2 != null) r2.unpersist(false): Unit
-          r2 = r1
-          r1 = rdd
+          gens.enqueue(rdd)
+          if (gens.size > 3) gens.dequeue().unpersist(false): Unit
           org.apache.spark.sql.graftshim.Frames.ofInternal(
             df.sparkSession, rdd, df.schema)
         }
@@ -93,8 +96,8 @@ object Checkpoints {
     /** Unpersist every tracked round (called on reliable cuts; loops may
       * call at the end once their result is materialized elsewhere). */
     def release(): Unit = {
-      if (r2 != null) { r2.unpersist(false): Unit; r2 = null }
-      if (r1 != null) { r1.unpersist(false): Unit; r1 = null }
+      gens.foreach(_.unpersist(false))
+      gens.clear()
     }
   }
 }

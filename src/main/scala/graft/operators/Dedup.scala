@@ -378,8 +378,8 @@ object Dedup {
     * components (plain neighbor propagation needs O(diameter)). Each round
     * is two key-bounded equi-joins + one hash agg; lineage is truncated
     * every round with a RELIABLE checkpoint (io/Checkpoints), so the loop
-    * survives executor loss and resumes idempotently — the same contract
-    * as kNN's ring loop. Only ids shuffle, never text.
+    * survives executor loss and resumes idempotently. Only ids shuffle,
+    * never text.
     *
     * Returns (doc_id, cluster_id, is_keeper) for every doc in some pair;
     * docs with no near-dup pair are their own keepers by definition and

@@ -1,10 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.F
-import graft.core.TileMath
 
 /** Distributed k-nearest-neighbor via cell-ring expansion + secondary sort
   * (SURVEY.md §3.3 J4), re-expressing the reference's nearest-neighbor
@@ -12,20 +11,24 @@ import graft.core.TileMath
   * — radius search ellipse; alg/gdalproximity.cpp :: GDALComputeProximity
   * — ring-by-ring neighborhood walk).
   *
-  * Algorithm: iterative doubling of a cell-disk radius. In round i the
-  * still-unresolved queries explode cell_disk(qcell, r_i), equi-join the
-  * point table on cell, rank candidates per query by (dist, pt_id) —
-  * secondary sort — and ACCEPT a query only when its k-th candidate lies
-  * within the ring guarantee distance r_i * cellSize: any point outside
-  * the searched disk is at least that far away (Chebyshev argument), so
-  * the k found are provably the global top-k. Unresolved queries continue
-  * with doubled radius; after maxRounds the radius jumps straight to the
-  * covering radius (disk ⊇ whole grid — the ring generator clamps to grid
-  * bounds), where every point is a candidate and results are accepted
-  * unconditionally (fewer than k rows iff the corpus has fewer than k
-  * points). There is NO cross-join fallback: every round is a bounded
-  * cell equi-join, so a sparse region with millions of stragglers shuffles
-  * (stragglers × reached cells) rows, never (stragglers × all points).
+  * Algorithm: one lazy plan, no driver round-trip. A count pyramid (points
+  * per cell at every zoom 0..zoom; cell ids carry their zoom, so one Long
+  * column keys every level) fixes each query's search level `l`: the
+  * finest zoom whose planar 3×3 block around the query's ancestor cell
+  * holds ≥ k points (0 when no zoom does, i.e. the corpus has fewer than
+  * k points — the zoom-0 block is the whole grid). The query then
+  * explodes cell_disk(ancestor at l, 3), equi-joins the points keyed by
+  * their ancestor cell at each zoom, and ranks candidates per query by
+  * (dist, pt_id) — secondary sort.
+  *
+  * Exactness (Chebyshev argument, s_l = cell size at zoom l): every point
+  * of the block lies within 2·s_l of the query on each axis, so the k-th
+  * distance is at most 2√2·s_l; every point outside the radius-3 disk is
+  * at least 3·s_l away on one axis. The disk therefore holds the k nearest
+  * points and every tie at the k-th distance. The block drops columns that
+  * wrap the antimeridian (they are not planar-near); the disk keeps them,
+  * since a wrapped cell only adds candidates. Each query joins a bounded
+  * 7×7 disk of cells at its own level, never the whole grid.
   *
   * Distance: planar euclidean in lon/lat degrees (documented; ties broken
   * by pt_id ascending — FIXTURES.md golden_knn rule).
@@ -34,76 +37,46 @@ object Knn {
 
   def knn(queries: DataFrame, qId: String, qLon: String, qLat: String,
           points: DataFrame, pId: String, pLon: String, pLat: String,
-          k: Int, zoom: Int, maxRounds: Int = 3): DataFrame = {
-    val spark = queries.sparkSession
-    F.ensureRegistered(spark)
-    import spark.implicits._
+          k: Int, zoom: Int): DataFrame = {
+    F.ensureRegistered(queries.sparkSession)
+    val zs = 0 to zoom
+    def ancestors(cell: Column): Column =
+      explode(array(zs.map(z => F.cell_at_zoom(cell, lit(z))): _*))
 
-    val cellSize = 180.0 / (1L << zoom).toDouble // geodetic cells are square
+    val qs = queries.select(
+      col(qId).as("__qid"), col(qLon).as("__qlon"), col(qLat).as("__qlat"),
+      F.cell_encode(col(qLon), col(qLat), lit(zoom)).as("__qcell"))
+    // every point once per zoom, keyed by its ancestor cell at that zoom
     val pts = points.select(
       col(pId).as("__pid"), col(pLon).as("__plon"), col(pLat).as("__plat"),
       F.cell_encode(col(pLon), col(pLat), lit(zoom)).as("__pcell"))
+      .select(col("__pid"), col("__plon"), col("__plat"),
+        ancestors(col("__pcell")).as("__cell"))
+    val pyramid = pts.groupBy("__cell").agg(count(lit(1)).as("__n"))
 
-    var pending = queries.select(
-      col(qId).as("__qid"), col(qLon).as("__qlon"), col(qLat).as("__qlat"),
-      F.cell_encode(col(qLon), col(qLat), lit(zoom)).as("__qcell"))
-    var results: DataFrame = null
-    var r = 1
-    var round = 0
+    // One aggregate per query: the points in its 3×3 block at each zoom,
+    // and the finest zoom whose block holds ≥ k. Single-Long join keys and
+    // broadcast sides keep one hash map or sort per task.
+    val level = qs
+      .withColumn("__anc", ancestors(col("__qcell")))
+      .withColumn("__cell", explode(F.cell_disk(col("__anc"), lit(1))))
+      .where(abs(F.cell_tx(col("__cell")) - F.cell_tx(col("__anc"))) <= 1)
+      .join(broadcast(pyramid), "__cell")
+      .groupBy("__qid", "__qlon", "__qlat", "__qcell")
+      .agg(greatest(lit(0) +: zs.map(z => when(
+        sum(when(F.cell_zoom(col("__cell")) === z, col("__n"))) >= k, lit(z))): _*)
+        .as("__l"))
 
     val dist2 = (col("__plon") - col("__qlon")) * (col("__plon") - col("__qlon")) +
       (col("__plat") - col("__qlat")) * (col("__plat") - col("__qlat"))
     val w = Window.partitionBy(col("__qid")).orderBy(col("__dist2"), col("__pid"))
-
-    // radius at which the Chebyshev disk (Y-clamped, X-wrapped) covers the
-    // whole geodetic grid: grid is 2^(z+1) × 2^z cells
-    val coveringR = (1L << zoom).toInt + 1
-    var covered = false
-    while (!covered && !pending.isEmpty) {
-      // after maxRounds of doubling, jump straight to full coverage
-      if (round >= maxRounds && r < coveringR) r = coveringR
-      covered = r >= coveringR
-      val guarantee = r.toDouble * cellSize
-      // cand feeds BOTH kth and resolved — persist so the ring join runs
-      // once per round instead of twice (round-3 verdict); released below
-      // once the round's outputs are checkpoint-materialized
-      val cand = pending
-        .withColumn("__cell", explode(F.cell_disk(col("__qcell"), lit(r))))
-        .join(pts.withColumnRenamed("__pcell", "__cell"), Seq("__cell"), "inner")
-        .withColumn("__dist2", dist2)
-        .withColumn("__rank", row_number().over(w))
-        .where(col("__rank") <= k)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // a query is resolved iff it has k candidates and the k-th is within
-      // the guarantee radius (otherwise a closer point may hide outside);
-      // on the covering round the disk holds every point, so accept
-      // whatever was found (fewer than k only if the corpus has fewer)
-      val kth =
-        if (covered) cand.select("__qid").distinct()
-        else cand.groupBy("__qid")
-          .agg(count(lit(1)).as("__n"), max(sqrt(col("__dist2"))).as("__kthDist"))
-          .where(col("__n") === k && col("__kthDist") <= guarantee)
-          .select("__qid")
-      // RELIABLE eager checkpoint of both round outputs: truncates the
-      // cross-round lineage chain (pending otherwise re-derives every
-      // prior ring join at the final action) and lets cand release NOW —
-      // resolved/pending are tiny (≤ k rows per query / unresolved query
-      // keys) next to the candidate set. Reliable, not localCheckpoint:
-      // blocks survive executor loss on a real cluster (io/Checkpoints).
-      val resolved = graft.io.Checkpoints.reliable(
-        cand.join(kth, Seq("__qid"), "left_semi")
-          .select("__qid", "__pid", "__dist2", "__rank"))
-      results = if (results == null) resolved else results.unionByName(resolved)
-      if (!covered)
-        pending = graft.io.Checkpoints.reliable(
-          pending.join(kth, Seq("__qid"), "left_anti"))
-      cand.unpersist(false)
-      r *= 2
-      round += 1
-    }
-
-    results.select(
-      col("__qid").as(qId), col("__pid").as(pId),
-      sqrt(col("__dist2")).as("dist"), col("__rank").as("rank"))
+    broadcast(level.withColumn("__cell", explode(
+        F.cell_disk(F.cell_at_zoom(col("__qcell"), col("__l")), lit(3)))))
+      .join(pts, "__cell")
+      .withColumn("__dist2", dist2)
+      .withColumn("__rank", row_number().over(w))
+      .where(col("__rank") <= k)
+      .select(col("__qid").as(qId), col("__pid").as(pId),
+        sqrt(col("__dist2")).as("dist"), col("__rank").as("rank"))
   }
 }

@@ -44,7 +44,7 @@ class EntrySpec extends AnyFunSuite {
     val out = java.nio.file.Files.createTempDirectory("graft_verify_fidelity").toFile
     try {
       val subset = SparkEntry.queries.view.filterKeys(
-        Set("q01_agg_filter", "q22_dedup_exact")).toMap
+        Set("q01_agg_filter", "q22_dedup_exact", "q51_geom_selfjoin")).toMap
       Verify.run(spark, TestSpark.SfSmall, out.getAbsolutePath, subset)
       subset.keys.foreach { name =>
         val d = new java.io.File(out, s"$name.parquet")
@@ -55,6 +55,9 @@ class EntrySpec extends AnyFunSuite {
         assert(foreign.isEmpty, s"$name: foreign files ${foreign.mkString(",")}")
       }
       assert(new java.io.File(out, "oracle_sql.json").isFile)
+      // q51 persists its cover and never releases it: Verify clears the
+      // cache per query, so nothing stays cached after the run
+      assert(spark.sharedState.cacheManager.isEmpty, "Verify left cached plans behind")
     } finally {
       def rm(f: java.io.File): Unit = {
         if (f.isDirectory) f.listFiles().foreach(rm); f.delete()

@@ -34,32 +34,14 @@ class IoStreamSpec extends AnyFunSuite {
     val df = spark.range(0, 1000, 1, 4).withColumn("k", col("id") % 7)
       .groupBy("k").agg(count(lit(1)).as("n"))
     val sc = spark.sparkContext
-    val jobsByGroup = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    val groupOfJob = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val markerDone = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val g = Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
-        groupOfJob.put(e.jobId, g)
-        jobsByGroup.merge(g, 1, (a: Integer, b: Integer) => a + b)
-      }
-      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        if (groupOfJob.get(e.jobId) == "marker") markerDone.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
+    val jobs = TestSpark.jobsPerGroup {
       sc.setJobGroup("commit", "commitStage")
       assert(CatalogIO.commitStage(spark, df, root, "jj", "s") == 7)
       sc.setJobGroup("plain", "plain write")
       df.write.parquet(s"$root/plain")
-      // listener events arrive in order: once the marker job has ended,
-      // every job of the two groups above has been counted
-      sc.setJobGroup("marker", "marker")
-      spark.range(1).collect()
-      assert(markerDone.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
-    assert(jobsByGroup.get("plain") != null && jobsByGroup.get("commit") == jobsByGroup.get("plain"),
-      s"commitStage jobs ${jobsByGroup.get("commit")} != plain write jobs ${jobsByGroup.get("plain")}")
+    }
+    assert(jobs.contains("plain") && jobs.get("commit") == jobs.get("plain"),
+      s"commitStage jobs ${jobs.get("commit")} != plain write jobs ${jobs.get("plain")}")
   }
 
   test("commitStage lineage: one row per data file, footer counts match the committed data") {
@@ -92,6 +74,26 @@ class IoStreamSpec extends AnyFunSuite {
     val txt = java.nio.file.Files.readString(java.nio.file.Paths.get(root, "je", "s", "MANIFEST.json"))
     assert(txt.contains("\"rows\":0,"), txt)
     assert(CatalogIO.commitStage(spark, spark.range(5).toDF("id"), root, "je", "s") == 0)
+  }
+
+  test("RoundCache: a probe every second cut evaluates each round once") {
+    // the stride-2 loops (Dedup.clusters, Network.shortestPaths, Polygonize)
+    // probe after every second cut; a released parent of an unmaterialized
+    // round would recompute back to the last reliable cut
+    val evals = spark.sparkContext.longAccumulator("round-evals")
+    val step = udf((x: Long) => { evals.add(1L); x + 1 }).asNondeterministic()
+    val rc = new graft.io.Checkpoints.RoundCache()
+    val rows = 100
+    val probes = 3
+    var cur = spark.range(0, rows, 1, 4).toDF("x")
+    for (p <- 1 to probes) {
+      for (_ <- 1 to 2) cur = rc.cut(cur.select(step(col("x")).as("x")))
+      val want = (0 until rows).map(_ + 2L * p).sum
+      assert(cur.agg(sum("x")).collect()(0).getLong(0) == want)
+    }
+    rc.release()
+    assert(evals.value == rows * 2L * probes,
+      s"${evals.value} row evaluations for ${2 * probes} rounds of $rows rows")
   }
 
   test("mergeStage: MERGE INTO law — update/insert/carry, row-level source-wins, idempotent") {

@@ -6,6 +6,7 @@ import graft.functions.F
 import graft.operators.{Knn, SpatialJoin}
 import graft.synth.Synth
 import graft.core.GeomIO
+import org.apache.spark.sql.DataFrame
 
 /** Engine vs brute-force oracles for the spatial join paths — including
   * non-box geometries (concave, holes) that the DuckDB range oracle cannot
@@ -191,30 +192,89 @@ class SpatialJoinSpec extends AnyFunSuite {
     assert(got == brute, s"engine ${got.size} vs brute ${brute.size}")
   }
 
-  test("kNN matches brute force incl. guarantee boundary") {
-    val queries = Synth.queryPoints(spark, TestSpark.SfSmall)
-    val points = Synth.points(spark, TestSpark.SfSmall)
+  /** Engine kNN vs brute force: per query, every point ranked by
+    * (dist², pt_id) with the same double arithmetic, top k kept. */
+  private def assertKnnMatchesBrute(name: String, queries: DataFrame, points: DataFrame,
+                                    k: Int, zoom: Int): Unit = {
     val got = Knn.knn(queries, "q_id", "lon", "lat", points, "pt_id", "lon", "lat",
-      k = 5, zoom = 7)
+      k = k, zoom = zoom)
       .select("q_id", "pt_id", "rank").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val qs = queries.collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-    val brute = qs.flatMap { case (qid, qx, qy) =>
-      pts.map { case (pid, px, py) =>
+    def rows(df: DataFrame, id: String) = df.select(id, "lon", "lat").collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
+    val ps = rows(points, "pt_id")
+    val brute = rows(queries, "q_id").flatMap { case (qid, qx, qy) =>
+      ps.map { case (pid, px, py) =>
         (qid, pid, (px - qx) * (px - qx) + (py - qy) * (py - qy))
-      }.sortBy(t => (t._3, t._2)).take(5).zipWithIndex
+      }.sortBy(t => (t._3, t._2)).take(k).zipWithIndex
         .map { case ((q, p, _), i) => (q, p, i + 1) }
     }.toSet
-    assert(got == brute, s"engine ${got.size} vs brute ${brute.size}")
+    assert(got == brute, s"$name: engine ${got.size} vs brute ${brute.size}: " +
+      s"extra ${(got -- brute).take(5)}, missing ${(brute -- got).take(5)}")
+  }
+
+  /** (id, lon, lat) rows, ids 1..n in input order. */
+  private def located(id: String, ps: Seq[(Double, Double)]): DataFrame =
+    ps.zipWithIndex.map { case ((x, y), i) => (i.toLong + 1, x, y) }.toDF(id, "lon", "lat")
+  private def pointsDf(ps: Seq[(Double, Double)]) = located("pt_id", ps)
+  private def queriesDf(qs: Seq[(Double, Double)]) = located("q_id", qs)
+
+  /** Deterministic points spread over the whole grid. */
+  private def scattered(n: Int, seed: Long): Seq[(Double, Double)] = {
+    val rnd = new scala.util.Random(seed)
+    Seq.fill(n)((rnd.nextDouble() * 360.0 - 180.0, rnd.nextDouble() * 180.0 - 90.0))
+  }
+
+  test("kNN matches brute force incl. guarantee boundary") {
+    // the five lon -173.5 points are planar-nearest to the antimeridian
+    // query; the lon 179.6 ones sit one wrapped cell away and must not
+    // satisfy the level count
+    val wrapped = (0 until 5).map(i => (179.6, 10.0 + i * 0.1)) ++
+      (0 until 5).map(i => (-173.5, 10.0 + i * 0.1))
+    val nearPoles = (0 until 40).map(i => (-180.0 + i * 9.0, if (i % 2 == 0) 89.9 else -89.95))
+    // six points at distance exactly 5 and one farther: ranks 1..4 by pt_id
+    val equidistant = Seq((3.0, 4.0), (4.0, 3.0), (-3.0, 4.0), (5.0, 0.0), (0.0, 5.0), (-5.0, 0.0), (6.0, 6.0))
+    val cases = Seq(
+      ("synth", Synth.queryPoints(spark, TestSpark.SfSmall), Synth.points(spark, TestSpark.SfSmall), 5, 7),
+      ("antimeridian", queriesDf(Seq((-179.9, 10.0))), pointsDf(wrapped), 5, 7),
+      ("poles", queriesDf(Seq((0.0, 89.99), (120.0, -89.99), (-179.5, 89.99))),
+        pointsDf(nearPoles ++ scattered(60, 3L)), 5, 9),
+      ("fewer points than k", queriesDf(Seq((0.0, 0.0), (100.0, -45.0))),
+        pointsDf(Seq((1.0, 1.0), (-50.0, 20.0), (170.0, -80.0))), 5, 8),
+      ("equidistant ties", queriesDf(Seq((0.0, 0.0))), pointsDf(equidistant), 4, 6),
+      ("deep zoom", queriesDf(scattered(20, 11L)), pointsDf(scattered(200, 7L)), 7, 14))
+    for ((name, queries, points, k, zoom) <- cases)
+      assertKnnMatchesBrute(name, queries, points, k, zoom)
   }
 
   test("kNN with k larger than any ring round (forces brute-force fallback)") {
     val queries = Synth.queryPoints(spark, TestSpark.SfSmall).limit(3)
     val points = Synth.points(spark, TestSpark.SfSmall).limit(40)
     val got = Knn.knn(queries, "q_id", "lon", "lat", points, "pt_id", "lon", "lat",
-      k = 25, zoom = 10, maxRounds = 2) // sparse points at deep zoom -> fallback
+      k = 25, zoom = 10) // sparse points at deep zoom
       .groupBy("q_id").count().collect()
     assert(got.forall(_.getLong(1) == 25))
+  }
+
+  test("kNN is one lazy plan: no job while it builds, a job count fixed by the plan") {
+    val sc = spark.sparkContext
+    val dense = (Synth.queryPoints(spark, TestSpark.SfSmall), Synth.points(spark, TestSpark.SfSmall))
+    val sparse = (queriesDf(scattered(20, 11L)), pointsDf(scattered(200, 7L)))
+    val cases = for ((name, (q, p)) <- Seq("dense" -> dense, "sparse" -> sparse); k <- Seq(1, 25))
+      yield (s"$name-k$k", q, p, k)
+    val jobs = TestSpark.jobsPerGroup {
+      for ((name, q, p, k) <- cases) {
+        sc.setJobGroup(s"build-$name", "knn build")
+        val res = Knn.knn(q, "q_id", "lon", "lat", p, "pt_id", "lon", "lat", k = k, zoom = 7)
+        sc.setJobGroup(s"action-$name", "knn action")
+        res.collect(): Unit
+      }
+    }
+    def perCase(phase: String) = cases.map(c => c._1 -> jobs.getOrElse(s"$phase-${c._1}", 0)).toMap
+    assert(perCase("build").values.forall(_ == 0), s"jobs while building: ${perCase("build")}")
+    val actionJobs = perCase("action")
+    assert(actionJobs.values.toSet.size == 1 && actionJobs.values.head > 0,
+      s"action job count depends on k or density: $actionJobs")
   }
 
   // OPTIMIZATION r6: the adaptive operators skip the cold/hot split when
